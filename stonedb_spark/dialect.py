@@ -48,6 +48,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stonedb_spark.catalog import invalidate
+
 # ---------------------------------------------------------------------------
 # MTR script → statements
 
@@ -2833,26 +2835,77 @@ def _rewrite_group_concat(sql: str, engine: str) -> str:
     return "".join(out)
 
 
+# words that can stand right before a parenthesized operand without
+# being a function name (``SELECT(a) DIV 2``, ``WHERE(x) DIV 3 > 1``)
+_DIV_NOT_FUNC = frozenset({
+    "SELECT", "WHERE", "HAVING", "ON", "AND", "OR", "XOR", "NOT", "WHEN",
+    "THEN", "ELSE", "IN", "BY", "AS", "IS", "CASE", "FROM", "SET",
+    "VALUES", "RETURN", "LIKE", "DIV", "MOD", "EXISTS",
+})
+
+
+def _div_left_operand(sql: str, end: int) -> int | None:
+    """Start of the operand that ends at ``end``: ``name(...)``,
+    ``(...)`` (any nesting), ``'literal'`` or an identifier/number."""
+    if sql[end - 1 : end] == ")":
+        depth = 0
+        for i in range(end - 1, -1, -1):
+            depth += (sql[i] == ")") - (sql[i] == "(")
+            if depth == 0:
+                break
+        else:
+            return None
+        name = re.search(r"\w+$", sql[:i])
+        if name and name.group(0).upper() not in _DIV_NOT_FUNC:
+            return name.start()
+        return i
+    if sql[end - 1 : end] == "'":
+        i = sql.rfind("'", 0, end - 1)
+        return i if i >= 0 else None
+    m = re.search(r"[\w.]+$", sql[:end])
+    return m.start() if m else None
+
+
+def _div_right_operand(sql: str, start: int) -> int | None:
+    """End of the operand that starts at ``start`` (same forms)."""
+    m = re.match(r"(\w+)?\(", sql[start:])
+    if m and (m.group(1) is None or m.group(1).upper() not in _DIV_NOT_FUNC):
+        depth = 0
+        for i in range(start + m.end() - 1, len(sql)):
+            depth += (sql[i] == "(") - (sql[i] == ")")
+            if depth == 0:
+                return i + 1
+        return None
+    m = re.match(r"'[^']*'|[\w.]+", sql[start:])
+    return start + m.end() if m else None
+
+
 def _rewrite_div(sql: str, engine: str) -> str:
-    """MySQL ``x DIV y`` (integer division, NULL on /0) per engine."""
-    operand = r"(\((?:[^()]|\([^()]*\))*\)|'[^']*'|[\w.]+)"
-    pat = re.compile(operand + r"\s+DIV\s+" + operand, re.I)
+    """MySQL ``x DIV y`` (integer division, NULL on /0) per engine.
 
-    def rep(m: re.Match) -> str:
-        x, y = m.group(1), m.group(2)
+    An operand is a function call (``COUNT(*)``, ``MAX(x)``), a
+    parenthesized expression, a string literal or an identifier/number;
+    chained ``a DIV b DIV c`` resolves left-to-right."""
+    pat = re.compile(r"\s+DIV\s+", re.I)
+    pos = 0
+    while True:
+        m = pat.search(sql, pos)
+        if m is None:
+            return sql
+        lo = _div_left_operand(sql, m.start())
+        hi = _div_right_operand(sql, m.end())
+        if lo is None or hi is None:
+            pos = m.end()  # not an operand pair this rule understands
+            continue
+        x, y = sql[lo : m.start()], sql[m.end() : hi]
         if engine == "spark":
-            return (
-                f"CAST(TRY_DIVIDE(CAST({x} AS DECIMAL(30,10)), {y}) AS BIGINT)"
-            )
-        return (
-            f"CAST(TRUNC(CAST({x} AS DECIMAL(30,10)) / NULLIF({y}, 0)) AS BIGINT)"
-        )
-
-    prev = None
-    while prev != sql:  # chained `a DIV b DIV c` resolves left-to-right
-        prev = sql
-        sql = pat.sub(rep, sql, count=1)
-    return sql
+            rep = f"CAST(TRY_DIVIDE(CAST({x} AS DECIMAL(30,10)), {y}) AS BIGINT)"
+        else:
+            rep = f"CAST(TRUNC(CAST({x} AS DECIMAL(30,10)) / NULLIF({y}, 0)) AS BIGINT)"
+        if lo and (sql[lo - 1].isalnum() or sql[lo - 1] == "_"):
+            rep = " " + rep  # SELECT(a) DIV 2: keep the keyword apart
+        sql = sql[:lo] + rep + sql[hi:]
+        pos = lo + len(rep)
 
 
 def _rewrite_limit_comma(sql: str) -> str:
@@ -12075,6 +12128,8 @@ def run_script(
             # mixed-case weird name would otherwise leak its table
             spark.sql(f"DROP TABLE IF EXISTS `{_physname(td_.name)}`")
         shutil.rmtree(workdir, ignore_errors=True)
+        # the script's DDL may have replaced or dropped catalog views
+        invalidate(spark)
 
 
 # ---------------------------------------------------------------------------

@@ -75,6 +75,10 @@ def get_spark(app_name: str = "stonedb_spark", extra_conf: dict | None = None) -
     return spark
 
 
+# built once per process: the source does not change under a running one
+_pkg_zip: str | None = None
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Ship the stonedb_spark package to executors (sc.addPyFile).
 
@@ -84,21 +88,27 @@ def _ship_package(spark: SparkSession) -> None:
     ModuleNotFoundError whenever the driver process wasn't launched
     from the repo root.  Shipping a zip is also exactly what a real
     cluster submit does (--py-files), so local behavior matches the
-    deployment story.  Idempotent per session."""
+    deployment story.  The zip is built once per process and added once
+    per SparkContext: a restarted session gets a new context, which
+    needs the file again."""
+    global _pkg_zip
     try:
-        if getattr(spark, "_stonedb_pkg_shipped", False):
+        sc = spark.sparkContext
+        if getattr(sc, "_stonedb_pkg_shipped", False):
             return
-        import shutil
-        import tempfile
+        if _pkg_zip is None or not os.path.exists(_pkg_zip):
+            import shutil
+            import tempfile
 
-        pkg_dir = os.path.dirname(os.path.abspath(__file__))
-        stamp = os.path.join(
-            tempfile.gettempdir(), f"stonedb_spark_pkg_{os.getpid()}"
-        )
-        zip_path = shutil.make_archive(stamp, "zip", os.path.dirname(pkg_dir),
-                                       os.path.basename(pkg_dir))
-        spark.sparkContext.addPyFile(zip_path)
-        spark._stonedb_pkg_shipped = True
+            pkg_dir = os.path.dirname(os.path.abspath(__file__))
+            stamp = os.path.join(
+                tempfile.gettempdir(), f"stonedb_spark_pkg_{os.getpid()}"
+            )
+            _pkg_zip = shutil.make_archive(
+                stamp, "zip", os.path.dirname(pkg_dir), os.path.basename(pkg_dir)
+            )
+        sc.addPyFile(_pkg_zip)
+        sc._stonedb_pkg_shipped = True
     except Exception:
         # never fail session bootstrap over packaging; worker-side
         # imports then require the repo on the workers' PYTHONPATH
@@ -114,7 +124,9 @@ def ensure_sql_confs(spark: SparkSession) -> None:
     without UTC/adaptive/pushdown confs results and plans drift from the
     tested ones.  Everything here is a runtime-settable SQL conf —
     static confs (master, memory, warehouse, UI) stay the caller's
-    choice.  Idempotent and cheap; called from catalog.load_tables."""
+    choice.  Idempotent, but one py4j round trip per conf, so
+    catalog.load_tables calls it once per (session, directory), not per
+    query — a conf the caller changes afterwards stays changed."""
     for k, v in _LOCAL_DEFAULTS.items():
         if k.startswith("spark.sql.") and k != "spark.sql.warehouse.dir":
             try:

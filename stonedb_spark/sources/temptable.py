@@ -27,6 +27,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from stonedb_spark.catalog import invalidate
 from stonedb_spark.sources.views import NotATableError, ViewExistsError
 
 
@@ -65,6 +66,7 @@ def create_temp_table(spark: SparkSession, name: str, df: DataFrame) -> DataFram
     df.write.mode("overwrite").parquet(path)
     reg = spark.read.parquet(path)
     reg.createOrReplaceTempView(name)
+    invalidate(spark)
     tables[name] = _Entry(path, shadowed)
     return reg
 
@@ -77,6 +79,7 @@ def insert_temp_table(spark: SparkSession, name: str, df: DataFrame) -> DataFram
     df.write.mode("append").parquet(tables[name].path)
     reg = spark.read.parquet(tables[name].path)
     reg.createOrReplaceTempView(name)
+    invalidate(spark)
     return reg
 
 
@@ -90,6 +93,7 @@ def drop_temp_table(spark: SparkSession, name: str) -> None:
         entry.shadowed.createOrReplaceTempView(name)
     else:
         spark.catalog.dropTempView(name)
+    invalidate(spark)
     shutil.rmtree(entry.path, ignore_errors=True)
 
 

@@ -33,6 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from stonedb_spark.catalog import invalidate
+
 
 class ViewError(Exception):
     """Base class for view-DDL errors (MySQL errno analog in .errno)."""
@@ -88,6 +90,7 @@ def create_view(
         raise ViewExistsError(f"Table '{name}' already exists")
     df = spark.sql(sql_text)  # analyze now: a broken definition fails here
     df.createOrReplaceTempView(name)
+    invalidate(spark)
     # Re-insert at the END of the ordered registry: refresh_views replays
     # definitions in insertion order, and an OR REPLACE that changes the
     # definition to reference a later-created view must re-analyze AFTER
@@ -103,6 +106,7 @@ def drop_view(spark: SparkSession, name: str) -> None:
         raise NotAViewError(f"Unknown view '{name}'")
     del views[name]
     spark.catalog.dropTempView(name)
+    invalidate(spark)
 
 
 def drop_table_guard(spark: SparkSession, name: str) -> None:
@@ -117,6 +121,7 @@ def drop_table_guard(spark: SparkSession, name: str) -> None:
         # MySQL 1051 ER_BAD_TABLE_ERROR: DROP TABLE on a nonexistent
         # name raises; dropTempView returns False without raising.
         raise NotATableError(f"Unknown table '{name}'")
+    invalidate(spark)
 
 
 def view_definition(spark: SparkSession, name: str) -> str | None:
@@ -136,3 +141,4 @@ def refresh_views(spark: SparkSession) -> None:
     """
     for name, text in _views_of(spark).items():
         spark.sql(text).createOrReplaceTempView(name)
+    invalidate(spark)

@@ -272,6 +272,28 @@ def test_catalog_mysql_facade(spark, sf_dir):
     assert rows2[0]["g"] == "AFRICA|AMERICA|ASIA|EUROPE|MIDDLE EAST"
 
 
+
+def test_div_function_operands_through_catalog_mysql(spark, sf_dir, oracle):
+    """``COUNT(*) DIV 3`` and ``MAX(x) DIV n`` take the whole call as the
+    left operand (they used to rewrite to invalid Spark SQL)."""
+    from stonedb_spark.catalog import mysql
+
+    assert _rewrite_div("SELECT 100 DIV 7 DIV 2, x DIV FLOOR(y)", "spark").count(
+        "TRY_DIVIDE"
+    ) == 3
+    text = (
+        "SELECT o_orderstatus, COUNT(*) DIV 3 AS c, MAX(o_custkey) DIV 7 AS m "
+        "FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"
+    )
+    got = mysql(spark, text, sf_dir).toPandas()
+    want = oracle.execute(
+        "SELECT o_orderstatus, COUNT(*) // 3 AS c, MAX(o_custkey) // 7 AS m "
+        "FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"
+    ).df()
+    assert len(got) > 1
+    assert not compare_frames(got, want)
+
+
 # ------------------------------------------------- round-7 rewrite passes
 
 
